@@ -170,10 +170,11 @@ def main() -> None:
     # truncated and the round-over-round comparison was lost. Defend the
     # contract line: per-query SPREAD diagnostics move to stderr (halving
     # the line), and the one-line JSON is printed LAST — after spark.stop(),
-    # so no late JVM output can land after it — followed by an explicit
-    # flush. The parsed schema is otherwise identical to r15 minus the
-    # "spread" key (a diagnostic the driver never consumed; VERDICT r15
-    # explicitly asked for it to move out of the line).
+    # so no late JVM output can land after it, and in a ``finally``, so a
+    # failing stop cannot lose it — followed by an explicit flush. The
+    # parsed schema is otherwise identical to r15 minus the "spread" key (a
+    # diagnostic the driver never consumed; VERDICT r15 explicitly asked
+    # for it to move out of the line).
     print(json.dumps({"spread": spreads}), file=sys.stderr)
     line = json.dumps(
         {
@@ -195,9 +196,11 @@ def main() -> None:
             "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         }
     )
-    spark.stop()
-    print(line)
-    sys.stdout.flush()
+    try:
+        spark.stop()
+    finally:
+        print(line)
+        sys.stdout.flush()
 
 
 if __name__ == "__main__":

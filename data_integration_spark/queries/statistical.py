@@ -62,6 +62,7 @@ def _fixture_pipeline(spark: SparkSession):
     its survey inputs); memoized per Spark context."""
     import os
 
+    from data_integration_spark.session import SCRATCH_ROOT
     from data_integration_spark.stats.em import EMEstimator
     from data_integration_spark.stats.fixtures import make_fixtures
     from data_integration_spark.stats.pipeline import run_pipeline
@@ -72,7 +73,7 @@ def _fixture_pipeline(spark: SparkSession):
     key = spark.sparkContext.applicationId
     if key in _PIPELINE_MEMO:
         return _PIPELINE_MEMO[key]
-    base = "/root/repo/.scratch/survey_fixtures"
+    base = os.path.join(SCRATCH_ROOT, "survey_fixtures")
     if not os.path.exists(os.path.join(base, "survey_small.parquet")):
         fx = make_fixtures()
         os.makedirs(base, exist_ok=True)

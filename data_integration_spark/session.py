@@ -19,6 +19,12 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
+#: scratch root for files the engine writes itself: ``.scratch`` at the
+#: top of the checkout this package is imported from
+SCRATCH_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
+
 
 def get_spark(
     app_name: str = "data_integration_spark",
@@ -57,7 +63,7 @@ def get_spark(
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get(
-                "SPARK_GRAFT_WAREHOUSE", "/root/repo/.scratch/spark-warehouse"
+                "SPARK_GRAFT_WAREHOUSE", os.path.join(SCRATCH_ROOT, "spark-warehouse")
             ),
         )
         # testdata's events.ts is TIMESTAMP(NANOS) which the vectorized parquet

@@ -21,6 +21,8 @@ import zipfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_integration_spark.session import SCRATCH_ROOT
+
 _PYFILE_SHIPPED: set[str] = set()
 
 
@@ -41,8 +43,7 @@ def ensure_worker_imports(spark: SparkSession) -> None:
         return
     pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     repo = os.path.dirname(pkg_dir)
-    scratch = os.path.join(repo, ".scratch")
-    os.makedirs(scratch, exist_ok=True)
+    os.makedirs(SCRATCH_ROOT, exist_ok=True)
     sources = []
     for root, _dirs, files in os.walk(pkg_dir):
         for f in files:
@@ -58,9 +59,9 @@ def ensure_worker_imports(spark: SparkSession) -> None:
         for p in sorted(sources)
     )
     digest = hashlib.sha256(manifest.encode()).hexdigest()[:16]
-    zip_path = os.path.join(scratch, f"data_integration_spark_pkg_{digest}.zip")
+    zip_path = os.path.join(SCRATCH_ROOT, f"data_integration_spark_pkg_{digest}.zip")
     if not os.path.exists(zip_path):
-        fd, tmp = tempfile.mkstemp(dir=scratch, suffix=".zip.tmp")
+        fd, tmp = tempfile.mkstemp(dir=SCRATCH_ROOT, suffix=".zip.tmp")
         os.close(fd)
         with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as z:
             for p in sorted(sources):

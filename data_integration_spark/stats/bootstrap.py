@@ -70,22 +70,6 @@ def _area_weighted_mean(df: DataFrame, value_col: str, alias: str) -> DataFrame:
     )
 
 
-def _clone_em(em: EMEstimator) -> EMEstimator:
-    """Fresh estimator with identical parameters — ``fit`` mutates
-    per-instance scratch (``_z_base``), so concurrent reps must never
-    share one instance."""
-    return EMEstimator(
-        n_reps=em.n_reps,
-        tol=em.tol,
-        max_iter=em.max_iter,
-        v_bounds=em.v_bounds,
-        sigma_sq_bounds=em.sigma_sq_bounds,
-        mode=em.mode,
-        seed=em.seed,
-        driver_cells_limit=em.driver_cells_limit,
-    )
-
-
 def parametric_bootstrap(
     small_survey: DataFrame,
     big_survey: DataFrame,
@@ -94,28 +78,20 @@ def parametric_bootstrap(
     n_reps: int = 10,
     em: EMEstimator | None = None,
     seed: int = 99,
-    parallelism: int = 1,
 ) -> tuple[DataFrame, pd.DataFrame]:
     """Returns (long (rep, state, est, true) DataFrame, per-rep EM estimates
     frame — the reference stores both, ``Rmd:700-718``).
 
-    ``parallelism=1`` (default) is the reference-faithful strictly
-    sequential ``lapply`` (``Rmd:732``). ``parallelism>1`` runs reps on a
-    thread pool issuing CONCURRENT Spark jobs against the shared session
-    (SURVEY.md §3.3's scale-up: the scheduler interleaves each rep's
-    many small jobs, filling executor slots a single sequential rep
-    leaves idle). Results are bit-identical in any mode/order: every
-    random draw is hash-seeded by (rep, area/unit) — no shared RNG state
-    — and each thread gets its own EMEstimator clone (``fit`` keeps
-    per-instance scratch). Replicate outputs are assembled in rep order
-    regardless of completion order."""
+    Reps run strictly in sequence, like the reference's ``lapply``
+    (``Rmd:732``), and share one estimator: ``EMEstimator.fit`` rebuilds its
+    per-fit scratch on every call."""
     em = em or EMEstimator(n_reps=200, max_iter=50)
 
     def run_rep(b: int) -> tuple[DataFrame, dict]:
         sim_small = simulate_outcome(
             small_survey, beta_fit, sigma_fit, b, seed=seed, survey_tag="small"
         )
-        fit_b = _clone_em(em).fit(sim_small)
+        fit_b = em.fit(sim_small)
         em_row = {
             "rep": b,
             "sigma": fit_b.sigma_hat,
@@ -133,15 +109,7 @@ def parametric_bootstrap(
         true_b = _area_weighted_mean(sim_big, "demvote", "true")
         return est_b.join(true_b, "state").withColumn("rep", F.lit(b)), em_row
 
-    reps = range(1, n_reps + 1)
-    if parallelism > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=parallelism) as pool:
-            results = list(pool.map(run_rep, reps))  # preserves rep order
-    else:
-        results = [run_rep(b) for b in reps]
-
+    results = [run_rep(b) for b in range(1, n_reps + 1)]
     parts = [r[0] for r in results]
     em_rows = [r[1] for r in results]
     long_df = union_all_by_name(parts).select("rep", "state", "est", "true")

@@ -48,7 +48,6 @@ def run_pipeline(
     bootstrap_reps: int = 0,
     bootstrap_em: EMEstimator | None = None,
     seed: int = 7,
-    bootstrap_parallelism: int = 1,
 ) -> PipelineResult:
     em = em or EMEstimator()
     # 1. fixed-effects baseline (reference glmer step, Rmd:68-80)
@@ -87,7 +86,6 @@ def run_pipeline(
             n_reps=bootstrap_reps,
             em=bootstrap_em,
             seed=seed + 100,
-            parallelism=bootstrap_parallelism,
         )
         mspe = mspe_table(boot_long)
     else:
